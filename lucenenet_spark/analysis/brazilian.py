@@ -27,7 +27,7 @@ BrazilianStemFilter.
 
 from __future__ import annotations
 
-from .tokenizers import MAX_TOKEN_LENGTH, _std_transform
+from .tokenizers import StandardChain
 from .intl import INTL_TOKEN_RE
 
 # BRAZILIAN_STOP_WORDS (BrazilianAnalyzer.cs:54-77), transcribed
@@ -293,18 +293,7 @@ def brazilian_analyzer(stopwords: frozenset[str] = BRAZILIAN_STOP_WORDS,
     """StandardTokenizer -> LowerCase -> StandardFilter ->
     Stop (holes) -> BrazilianStemFilter
     (BrazilianAnalyzer.cs TokenStream)."""
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            if tok not in exclusions:
-                s = brazilian_stem(tok)
-                if s is not None and s != tok:
-                    tok = s
-            out.append((tok, pos))
-        return out
-    return analyze
+    def stem(tok: str) -> str:
+        s = None if tok in exclusions else brazilian_stem(tok)
+        return tok if s is None else s
+    return StandardChain(frozenset(stopwords), stem, INTL_TOKEN_RE)

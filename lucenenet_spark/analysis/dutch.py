@@ -27,7 +27,7 @@ reference's case-sensitive stop set would keep them.
 
 from __future__ import annotations
 
-from .tokenizers import MAX_TOKEN_LENGTH, _std_transform
+from .tokenizers import StandardChain
 from .intl import INTL_TOKEN_RE
 
 # DUTCH_STOP_WORDS (DutchAnalyzer.cs:58-70), transcribed verbatim.
@@ -254,18 +254,7 @@ def dutch_analyzer(stopwords: frozenset[str] = DUTCH_STOP_WORDS,
     if stem_dict is None:
         stem_dict = DEFAULT_STEM_DICT
 
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            if tok not in exclusions:
-                s = dutch_stem(tok, stem_dict)
-                if s is not None and s != tok:
-                    tok = s
-            out.append((tok, pos))
-        return out
-    return analyze
+    def stem(tok: str) -> str:
+        s = None if tok in exclusions else dutch_stem(tok, stem_dict)
+        return tok if s is None else s
+    return StandardChain(frozenset(stopwords), stem, INTL_TOKEN_RE)

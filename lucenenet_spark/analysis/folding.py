@@ -7,7 +7,7 @@ ISOLatin1 filter covers, single-char foldings) shared verbatim by four
 implementations so they fold identically:
 
   1. pure-Python str.translate (query-side + invert kernels)
-  2. Spark F.translate (JVM logical-build path)
+  2. Spark F.translate (JVM query-side expressions)
   3. DuckDB translate(...) (oracle SQL, when a folded entry is wired)
   4. pandas .str.translate (Arrow UDF path)
 
@@ -42,7 +42,7 @@ def fold_ascii_py(text: str) -> str:
 
 
 def fold_ascii_col(text: Column) -> Column:
-    """JVM-expression fold (logical build path, codegen-friendly)."""
+    """JVM-expression fold (query-side, codegen-friendly)."""
     return F.translate(text, FOLD_SRC, FOLD_DST)
 
 

@@ -171,20 +171,10 @@ def german_legacy_analyzer(din2: bool = False,
     StandardTokenizer -> StandardFilter -> LowerCase -> StopFilter
     (GERMAN_ANALYZER_STOP_WORDS) -> GermanStemFilter (exclusion set
     passes through unstemmed)."""
-    from .tokenizers import (
-        MAX_TOKEN_LENGTH, STANDARD_TOKEN_RE, _std_transform)
+    from .tokenizers import StandardChain
 
-    def analyze(text):
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH \
-                    or tok in GERMAN_ANALYZER_STOP_WORDS:
-                continue
-            if tok not in exclusions:
-                tok = german_legacy_stem(tok, din2=din2)
-            out.append((tok, pos))
-        return out
-    return analyze
+    def stem(tok: str) -> str:
+        if tok in exclusions:
+            return tok
+        return german_legacy_stem(tok, din2=din2)
+    return StandardChain(GERMAN_ANALYZER_STOP_WORDS, stem)

@@ -42,7 +42,7 @@ from __future__ import annotations
 import unicodedata
 
 from .tokenizers import (
-    MAX_TOKEN_LENGTH, STANDARD_ALTERNATION, _std_transform)
+    MAX_TOKEN_LENGTH, STANDARD_ALTERNATION, StandardChain, _std_transform)
 
 import re
 
@@ -181,17 +181,7 @@ def czech_analyzer(stopwords: frozenset[str] = CZECH_STOP_WORDS):
     ASCII corpus it tokenizes bit-identically to tokenize_standard, so
     the sqlgen.base_ctes SQL mirror applies with the stop set swapped.
     """
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(INTL_TOKEN_RE.findall(text.lower())):
-            tok = _std_transform(tok)
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            out.append((tok, pos))
-        return out
-    return analyze
+    return StandardChain(frozenset(stopwords), token_re=INTL_TOKEN_RE)
 
 
 # =============================================================== Arabic
@@ -584,17 +574,10 @@ def russian_stem(word: str) -> str:
 
 def russian_analyzer(stopwords: frozenset[str] = RUSSIAN_STOP_WORDS):
     """RussianLetterTokenizer (letters + ASCII digits) -> LowerCase ->
-    Stop (holes) -> RussianStemFilter (RussianAnalyzer.cs:136-144)."""
-    def analyze(text: str) -> list[tuple[str, int]]:
-        if text is None:
-            return []
-        out = []
-        for pos, tok in enumerate(_RU_LETTER_RE.findall(text.lower())):
-            if len(tok) > MAX_TOKEN_LENGTH or tok in stopwords:
-                continue
-            out.append((russian_stem(tok), pos))
-        return out
-    return analyze
+    Stop (holes) -> RussianStemFilter (RussianAnalyzer.cs:136-144).
+    StandardFilter never changes a letter/digit run, so the chain is a
+    StandardChain over the Russian tokenizer pattern."""
+    return StandardChain(frozenset(stopwords), russian_stem, _RU_LETTER_RE)
 
 
 # ================================================================== Thai

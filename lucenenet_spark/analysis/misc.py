@@ -36,15 +36,19 @@ import re
 
 from pyspark.sql import functions as F
 
-from .tokenizers import ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, tokenize_standard
+from .tokenizers import ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, StandardChain
 
 DEFAULT_MAX_DOC_FREQ_PERCENT = 0.4  # QueryAutoStopWordAnalyzer.cs:19
 
 
 # ---- ReverseStringFilter + leading-wildcard acceleration ----
 
-def reverse_tokens(text: str | None) -> list[tuple[str, int]]:
-    return [(t[::-1], p) for t, p in tokenize_standard(text)]
+def _reverse(term: str) -> str:
+    return term[::-1]
+
+
+#: ReverseStringFilter after the standard chain
+reverse_tokens = StandardChain(stem=_reverse)
 
 
 def reverse_analyzer():
@@ -124,10 +128,7 @@ def auto_stopwords(index, field: str = "text",
 
 def auto_stop_analyzer(stop_terms: set[str]):
     """Standard chain minus the derived stop set (holes preserved)."""
-    def analyze(text):
-        return [(t, p) for t, p in tokenize_standard(text)
-                if t not in stop_terms]
-    return analyze
+    return StandardChain(ENGLISH_STOP_WORDS | frozenset(stop_terms))
 
 
 # ---- contrib/Core Analysis.Ext (src/contrib/Core/Analysis/Ext/

@@ -12,7 +12,7 @@ chain: after lowercase + stop removal).
 
 from __future__ import annotations
 
-from .tokenizers import tokenize_standard
+from .tokenizers import StandardChain
 
 _VOWELS = set("aeiou")
 
@@ -159,6 +159,5 @@ def porter_stem(w: str) -> str:
     return w
 
 
-def tokenize_porter(text: str) -> list[tuple[str, int]]:
-    """Standard chain + Porter stemming per emitted token."""
-    return [(porter_stem(t), p) for t, p in tokenize_standard(text)]
+#: Standard chain + Porter stemming per emitted token.
+tokenize_porter = StandardChain(stem=porter_stem)

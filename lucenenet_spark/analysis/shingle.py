@@ -1,7 +1,7 @@
 """Shingle (word n-gram) and NGram (char n-gram) analyzers.
 
 Re-creates contrib ShingleFilter and NGramTokenizer as `analyzer=`
-callables for build_segmented_index / build_inverted_index (the Analyzer
+callables for build_segmented_index (the Analyzer
 extension point, SURVEY §2.12):
 
 - shingle_analyzer: word n-grams over the standard chain

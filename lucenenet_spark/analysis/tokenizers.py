@@ -33,6 +33,8 @@ Semantics (the spec):
 from __future__ import annotations
 
 import re
+from collections.abc import Callable
+from dataclasses import dataclass
 
 # The exact 33-word English stop set of the reference
 # (src/Lucene.Net/Analysis/StopAnalyzer.cs:134).
@@ -124,22 +126,50 @@ CODE_LANGS: frozenset[str] = frozenset(
 )
 
 
-def tokenize_standard(text: str) -> list[tuple[str, int]]:
-    """(term, position) pairs after the standard chain; holes preserved.
+@dataclass(frozen=True)
+class StandardChain:
+    """StandardTokenizer -> StandardFilter -> LowerCaseFilter -> length
+    filter -> StopFilter (holes kept) -> optional per-term filter: the
+    shape every term->term analyzer shares (StandardAnalyzer.cs:107-115,
+    SnowballAnalyzer.cs TokenStream, GermanAnalyzer.cs:203-217).
 
-    Full chain: StandardTokenizer type classes (EMAIL/APOSTROPHE/COMPANY/
-    NUM/HOST/ACRONYM/ALPHANUM) -> StandardFilter ('s strip, acronym dot
-    removal) -> LowerCaseFilter (folded into the lower() pre-pass) ->
-    length filter -> StopFilter with position holes."""
-    if text is None:
-        return []
-    out: list[tuple[str, int]] = []
-    for pos, tok in enumerate(STANDARD_TOKEN_RE.findall(text.lower())):
-        tok = _std_transform(tok)
-        if len(tok) > MAX_TOKEN_LENGTH or tok in ENGLISH_STOP_WORDS:
-            continue
-        out.append((tok, pos))
-    return out
+    Calling it analyzes text -> [(term, position)], positions assigned
+    over ALL raw tokens.  `transform` is the same chain applied to ONE
+    raw token -> (term, keep); the index build runs it once per unique
+    raw token of a partition instead of once per token.
+
+    stop: terms dropped after StandardFilter (positions kept as holes).
+    stem: term -> term applied to every kept token (a stemmer, reversal,
+      exclusion-aware stem, ...); None keeps the term.
+    token_re: the tokenizer pattern, run over the lowercased text."""
+
+    stop: frozenset[str] = ENGLISH_STOP_WORDS
+    stem: Callable[[str], str] | None = None
+    token_re: re.Pattern = STANDARD_TOKEN_RE
+
+    def transform(self, raw: str) -> tuple[str, bool]:
+        tok = _std_transform(raw)
+        if len(tok) > MAX_TOKEN_LENGTH or tok in self.stop:
+            return tok, False
+        return (tok if self.stem is None else self.stem(tok)), True
+
+    def __call__(self, text: str | None) -> list[tuple[str, int]]:
+        if text is None:
+            return []
+        out: list[tuple[str, int]] = []
+        for pos, raw in enumerate(self.token_re.findall(text.lower())):
+            tok, keep = self.transform(raw)
+            if keep:
+                out.append((tok, pos))
+        return out
+
+
+#: (term, position) pairs after the standard chain; holes preserved.
+#: Full chain: StandardTokenizer type classes (EMAIL/APOSTROPHE/COMPANY/
+#: NUM/HOST/ACRONYM/ALPHANUM) -> StandardFilter ('s strip, acronym dot
+#: removal) -> LowerCaseFilter (folded into the lower() pre-pass) ->
+#: length filter -> StopFilter with position holes.
+tokenize_standard = StandardChain()
 
 
 def _len_preserving_lower(text: str) -> str:
@@ -166,10 +196,9 @@ def tokenize_standard_offsets(
     low = _len_preserving_lower(text)
     out: list[tuple[str, int, int, int]] = []
     for pos, m in enumerate(STANDARD_TOKEN_RE.finditer(low)):
-        tok = _std_transform(m.group(0))
-        if len(tok) > MAX_TOKEN_LENGTH or tok in ENGLISH_STOP_WORDS:
-            continue
-        out.append((tok, pos, m.start(), m.end()))
+        tok, keep = tokenize_standard.transform(m.group(0))
+        if keep:
+            out.append((tok, pos, m.start(), m.end()))
     return out
 
 

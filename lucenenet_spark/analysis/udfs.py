@@ -1,10 +1,9 @@
-"""Analyzers as Arrow-vectorized pandas UDFs (the pluggable analyzer seam).
+"""Analyzers as Arrow-vectorized pandas UDFs.
 
 This is the extension point the reference exposes as Analyzer/TokenStream
-(src/Lucene.Net/Analysis/Analyzer.cs) — a user-supplied tokenizer runs as a
-vectorized pandas_udf; the lang-keyed code tokenizer plugs in here.  Used by
-the segment build path (index/segments.py) where tokenize + local invert +
-encode happen in one Arrow pass per partition.
+(src/Lucene.Net/Analysis/Analyzer.cs) re-expressed as a column function:
+the lang-keyed analyzer dispatch runs as a vectorized pandas_udf that
+yields array<struct<term, pos>> per row.
 """
 
 from __future__ import annotations
@@ -13,7 +12,7 @@ import pandas as pd
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from .tokenizers import tokenize_code, tokenize_standard
+from .tokenizers import tokenize
 
 _TOKPOS_SCHEMA = T.ArrayType(
     T.StructType(
@@ -25,29 +24,7 @@ _TOKPOS_SCHEMA = T.ArrayType(
 )
 
 
-def _analyze_series(text: pd.Series, lang: pd.Series | None) -> pd.Series:
-    from .tokenizers import CODE_LANGS  # local to keep pickle small
-
-    if lang is None:
-        return text.map(lambda t: tokenize_standard(t) if t is not None else [])
-
-    def one(t: str, lg: str) -> list[tuple[str, int]]:
-        if t is None:
-            return []
-        if lg is not None and lg.lower() in CODE_LANGS:
-            return tokenize_code(t)
-        return tokenize_standard(t)
-
-    return pd.Series([one(t, lg) for t, lg in zip(text, lang)])
-
-
-@F.pandas_udf(_TOKPOS_SCHEMA)
-def analyze_standard(text: pd.Series) -> pd.Series:
-    """content -> array<struct<term,pos>> via the standard chain."""
-    return _analyze_series(text, None)
-
-
 @F.pandas_udf(_TOKPOS_SCHEMA)
 def analyze_per_lang(text: pd.Series, lang: pd.Series) -> pd.Series:
     """PerFieldAnalyzerWrapper analogue: dispatch on the lang column."""
-    return _analyze_series(text, lang)
+    return pd.Series([tokenize(t, lg) for t, lg in zip(text, lang)])

@@ -18,11 +18,16 @@ stages:
      analogue (IndexFileNames.cs:29-37) — and a killed build resumes from
      the last committed wave.
 
-Query-time: `postings` exposes a lazily-decoded relational view with the
-same schema as the logical path (field, term, doc_id, tf, dl, positions),
-so plans/lowering.Searcher runs unchanged; the (field, term) filter is
-applied BEFORE blob decode (term-dictionary seek analogue,
-TermInfosReader.cs:243-308 — only matching posting lists are decompressed).
+Query-time: `postings` exposes a lazily-decoded relational view
+(field, term, doc_id, tf, dl, positions) that plans/lowering.Searcher
+scores; the (field, term) filter is applied BEFORE blob decode
+(term-dictionary seek analogue, TermInfosReader.cs:243-308 — only matching
+posting lists are decompressed).
+
+Analysis: one invert kernel, two paths chosen by the analyzer's type and
+the column type (see _invert_partition) — the default and every
+StandardChain analyzer run vectorized; keyword fields, array<string>
+columns and non term->term analyzers run per doc.
 """
 
 from __future__ import annotations
@@ -38,9 +43,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from ..analysis.tokenizers import tokenize
+from ..analysis.tokenizers import StandardChain, tokenize, tokenize_standard
 from . import codec
-from .builder import IndexStats
 
 SEGMENT_SCHEMA = T.StructType([
     T.StructField("field", T.StringType(), False),
@@ -65,6 +69,21 @@ SEGMENT_SCHEMA = T.StructType([
 MERGE_FACTOR = 10  # LogMergePolicy.cs:56
 
 
+@dataclass
+class IndexStats:
+    """Global (N, total tokens) of an index generation — computed once per
+    build, the distributed-scoring lemma of MultiSearcher.CreateWeight
+    (src/Lucene.Net/Search/MultiSearcher.cs:355-390): rank identity under
+    sharding needs globally aggregated stats before scoring."""
+    n_docs: int
+    total_tokens: int
+
+    @property
+    def avgdl(self) -> float:
+        # total emitted tokens / total docs (docs with 0 tokens count in N)
+        return self.total_tokens / self.n_docs if self.n_docs else 0.0
+
+
 def _invert_partition(field_name: str, id_col: str, text_col: str,
                       lang_col: str | None, positions: bool,
                       keyword: bool = False, fold: bool = False,
@@ -77,22 +96,31 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
     factorize terms -> lexsort (term, doc, pos) -> run-length boundaries
     -> segmented encode, one byte-stream split per term.
 
-    FAST PATH (plain string column, built-in analyzers): the ONLY per-doc
-    Python is one regex findall; the StandardFilter/length/stop transforms
-    run over the factorized UNIQUE terms (vocabulary-sized, 10-30x fewer
-    than tokens), positions come from arange arithmetic, per-doc lengths
-    from one add.reduceat. This cuts per-token object allocation ~5x —
-    the invert kernel is memory-bandwidth-bound at high core counts
-    (BENCH/hw_ceiling.json), so allocation traffic is what scaling buys.
+    Path selection (the analyzer's type plus a probe of the column type):
 
-    SLOW PATH (keyword fields, custom analyzer=, multi-valued
-    array<string> columns, or force_slow=True for equivalence tests):
-    the original per-doc tokenize loop; bit-identical output.
+    FAST PATH (plain string column; analyzer=None or a StandardChain):
+    the ONLY per-doc Python is one regex findall; the chain's per-term
+    transform (StandardFilter/length/stop/stem) runs over the factorized
+    UNIQUE raw tokens (vocabulary-sized, 10-30x fewer than tokens),
+    positions come from arange arithmetic, per-doc lengths from one
+    add.reduceat. This cuts per-token object allocation ~5x — the
+    invert kernel is memory-bandwidth-bound at high core counts
+    (BENCH/hw_ceiling.json), so allocation traffic is what scaling buys.
+    With analyzer=None, lang_col routes code languages to the code
+    tokenizer; a StandardChain analyzer runs on every doc and ignores
+    lang_col, exactly as the slow path does.
+
+    SLOW PATH (keyword fields, array<string> columns, analyzers that are
+    not a StandardChain — payload, shingle/n-gram, synonym, CJK,
+    compound, ... — or force_slow=True, the reference for equivalence
+    tests): the per-doc tokenize loop; bit-identical output.
 
     keyword=True indexes the whole column value as ONE term with tf=1,
     dl=1, position 0 (KeywordAnalyzer, src/Lucene.Net/Analysis/
-    KeywordAnalyzer.cs) — identical semantics to the logical path's
-    keyword_cols."""
+    KeywordAnalyzer.cs)."""
+    chain = tokenize_standard if analyzer is None else analyzer
+    slow_only = (force_slow or keyword
+                 or not isinstance(chain, StandardChain))
 
     def _slow_accumulate(pdf, acc):
         term_chunks, doc_chunks, pos_chunks, tok_counts, pay_chunks = acc
@@ -134,17 +162,16 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
                 if len(toks[0]) == 3 else None)
 
     def _fast_accumulate(pdf, std, cod):
-        from ..analysis.tokenizers import (
-            CODE_LANGS, CODE_SUBTOKEN_RE, STANDARD_TOKEN_RE)
+        from ..analysis.tokenizers import CODE_LANGS, CODE_SUBTOKEN_RE
         if fold:
             from ..analysis.folding import fold_ascii_py
-        if lang_col:
+        if lang_col and analyzer is None:
             is_code = (pdf[lang_col].astype(str).str.lower()
                        .isin(CODE_LANGS).to_numpy())
         else:
             is_code = np.zeros(len(pdf), bool)
         code_find = CODE_SUBTOKEN_RE.findall
-        std_find = STANDARD_TOKEN_RE.findall
+        std_find = chain.token_re.findall
         for i, (doc_id, text) in enumerate(zip(pdf[id_col], pdf[text_col])):
             if not isinstance(text, str):
                 continue  # null (None/NaN); arrays ruled out by mode probe
@@ -190,7 +217,6 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
         from pyspark import TaskContext
         seg_id = TaskContext.get().partitionId()
 
-        slow_only = force_slow or keyword or analyzer is not None
         mode = "slow" if slow_only else None
         slow_acc = ([], [], [], [], [])  # terms, docs, pos, counts, payloads
         std = ([], [], [])           # raw chunks, counts, doc_ids
@@ -230,13 +256,7 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
             ns = np.asarray(tok_counts, np.int64)
             dlv = np.repeat(ns, ns)
         elif mode == "fast" and (std[0] or cod[0]):
-            from ..analysis.tokenizers import (
-                ENGLISH_STOP_WORDS, MAX_TOKEN_LENGTH, _std_transform)
-
-            def _tx_std(u):
-                t = _std_transform(u)
-                return t, (len(t) <= MAX_TOKEN_LENGTH
-                           and t not in ENGLISH_STOP_WORDS)
+            from ..analysis.tokenizers import MAX_TOKEN_LENGTH
 
             def _tx_code(u):
                 # tokenize_code: length test on the RAW sub-token,
@@ -245,7 +265,7 @@ def _invert_partition(field_name: str, id_col: str, text_col: str,
 
             parts = []
             if std[0]:
-                parts.append(_fast_stream(std, _tx_std))
+                parts.append(_fast_stream(std, chain.transform))
             if cod[0]:
                 parts.append(_fast_stream(cod, _tx_code))
             # merge the two vocabularies into one id space (the same term
@@ -481,10 +501,12 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
 
 @dataclass
 class SegmentedIndex:
-    """Compressed-postings index, drop-in queryable via plans/lowering.
+    """Compressed-postings index, queryable via plans/lowering.Searcher.
 
-    Exposes the same surface as builder.InvertedIndex (postings / n_docs /
-    avgdl / stored / id_col / fields / term_stats / cache)."""
+    Surface: decoded postings views (postings / postings_nopos /
+    postings_payloads), n_docs / avgdl, the stored-fields table (`stored`
+    is the source table itself — the .fdt/.fdx analogue, SURVEY.md §1.4),
+    id_col / fields, term_stats / term_dfs, deletes, cache, save/load."""
 
     spark: SparkSession
     segments: DataFrame
@@ -943,8 +965,11 @@ def build_segmented_index(
         docs = docs.repartitionByRange(par, id_col)
 
     # analyzer: a callable text -> [(term, pos)] overriding the standard
-    # chain (the Analyzer extension point, SURVEY §2.12 — Whitespace /
-    # Letter / LowerCase tokenizers in analysis.tokenizers plug in here).
+    # chain (the Analyzer extension point, SURVEY §2.12). A StandardChain
+    # (every Snowball / legacy stemmer, stop-set and reverse analyzer)
+    # runs on the vectorized invert path and ignores lang_col; any other
+    # callable (Whitespace / Letter tokenizers, shingles, payloads, ...)
+    # runs per doc.
     seg = docs.select(*cols).mapInPandas(
         _invert_partition(field_name, id_col, text_col, lang_col, positions,
                           fold=fold_ascii, analyzer=analyzer,
@@ -1329,7 +1354,12 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
                 for k in ("df", "ttf", "docs_blob", "tfs_blob",
                           "dls_blob", "pos_blob", "pay_blob", "blocks"):
                     out[k].append(enc[k])
-            yield pd.DataFrame(out, columns=[f.name for f in SEGMENT_SCHEMA])
+            # a batch whose rows all belonged to deleted docs yields no
+            # frame: an empty one types every column float64, which Arrow
+            # cannot convert to the `blocks` list<struct>
+            if out["field"]:
+                yield pd.DataFrame(
+                    out, columns=[f.name for f in SEGMENT_SCHEMA])
 
     joined = index.segments.join(index.delete_frames(), "seg_id", "left")
     seg2 = joined.mapInPandas(kernel, SEGMENT_SCHEMA).cache()

@@ -175,7 +175,7 @@ def wand_topk(index, term_boosts: list[tuple[str, float]], k: int = 10,
     seg = index.segments.where(
         (F.col("field") == field) & F.col("term").isin(sorted(weights))
     ).select("seg_id", "term", "docs_blob", "tfs_blob", "dls_blob", "blocks")
-    del_t = index.delete_frames() if hasattr(index, "delete_frames") else None
+    del_t = index.delete_frames()
     if del_t is not None:
         seg = seg.join(del_t, "seg_id", "left")
     per_segment = (

@@ -40,7 +40,7 @@ from pyspark.sql import types as T
 
 from ..functions import bm25
 from ..functions.similarity import BM25Similarity
-from ..index.builder import InvertedIndex
+from ..index.segments import SegmentedIndex
 from ..index.cache import SegmentCache
 from . import ast
 
@@ -70,10 +70,10 @@ class TimeExceededError(RuntimeError):
 
 
 class Searcher:
-    """IndexSearcher analogue over an InvertedIndex
+    """IndexSearcher analogue over a SegmentedIndex
     (src/Lucene.Net/Search/IndexSearcher.cs)."""
 
-    def __init__(self, index: InvertedIndex, similarity=None):
+    def __init__(self, index: SegmentedIndex, similarity=None):
         """similarity: a functions.similarity strategy object
         (Searcher.SetSimilarity analogue, src/Lucene.Net/Search/
         Searcher.cs / Similarity.cs:560,644).  Default BM25; pass
@@ -85,21 +85,13 @@ class Searcher:
         self.sim = similarity if similarity is not None else BM25Similarity()
         self._filter_cache: dict = {}
 
-    @property
-    def _postings_nopos(self) -> DataFrame:
-        """Positions-free postings view when the index offers one (the
-        segmented path skips the .prx decode entirely for term/boolean/
-        range scoring); falls back to the full view."""
-        p = getattr(self.index, "postings_nopos", None)
-        return p if p is not None else self.index.postings
-
     # ------------------------------------------------------------------ api
 
     def _live(self, frame: DataFrame) -> DataFrame:
         """Apply the deletes bitmap (anti-join on tombstones — the
         query-time .del check, src/Lucene.Net/Index/SegmentTermDocs.cs
         deletedDocs.Get)."""
-        t = getattr(self.index, "tombstones", None)
+        t = self.index.tombstones
         if t is None:
             return frame
         return frame.join(t, "doc_id", "left_anti")
@@ -264,7 +256,7 @@ class Searcher:
             )
         else:
             doc_terms = (
-                self._postings_nopos
+                self.index.postings_nopos
                 .where((F.col("field") == field)
                        & (F.col("doc_id") == doc_id))
                 .select("term", "tf").collect()
@@ -308,7 +300,7 @@ class Searcher:
 
         if isinstance(q, ast.Term):
             row = (
-                self._postings_nopos
+                self.index.postings_nopos
                 .where((F.col("field") == q.field)
                        & (F.col("term") == q.term)
                        & (F.col("doc_id") == doc_id))
@@ -511,7 +503,7 @@ class Searcher:
             .where((F.col("field") == q.field) & (F.col("term") == q.term))
             .select("field", "term", "df")
         )
-        p = self._postings_nopos.where(
+        p = self.index.postings_nopos.where(
             (F.col("field") == q.field) & (F.col("term") == q.term)
         ).join(F.broadcast(stats), ["field", "term"])
         score = self.sim.term_score(
@@ -525,7 +517,7 @@ class Searcher:
         if stored is not None:
             ids = stored.select(F.col(self.index.id_col).alias("doc_id"))
         else:
-            ids = self._postings_nopos.select("doc_id").distinct()
+            ids = self.index.postings_nopos.select("doc_id").distinct()
         return ids.select("doc_id", F.lit(float(q.boost)).alias("score"))
 
     # ---- boolean composition: ONE union + ONE groupBy(doc_id)
@@ -843,7 +835,7 @@ class Searcher:
         """CONSTANT_SCORE_FILTER rewrite: no term enumeration, direct
         predicate on the postings term column -> distinct doc set."""
         return (
-            self._postings_nopos.where(
+            self.index.postings_nopos.where(
                 (F.col("field") == q.field) & self._term_predicate(q)
             )
             .select("doc_id")
@@ -1039,14 +1031,8 @@ class Searcher:
         return F.when(pay_cnt > 0, agg).otherwise(F.lit(1.0))
 
     def _payload_postings(self, field: str, term: str) -> DataFrame:
-        pview = getattr(self.index, "postings_payloads", None)
-        if pview is None:
-            raise TypeError(
-                "payload queries need a payload-carrying SegmentedIndex "
-                "(build with a payload-emitting analyzer, e.g. "
-                "analysis.payloads.delimited_payload_analyzer)")
-        return pview.where((F.col("field") == field)
-                           & (F.col("term") == term))
+        return self.index.postings_payloads.where(
+            (F.col("field") == field) & (F.col("term") == term))
 
     def _payload_term_frame(self, q: ast.PayloadTerm) -> DataFrame:
         """PayloadTermQuery (PayloadTermQuery.cs:124-199): span-term freq

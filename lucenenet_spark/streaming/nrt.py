@@ -28,9 +28,9 @@ import os
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from ..index.builder import IndexStats
 from ..index.segments import (
     SEGMENT_SCHEMA,
+    IndexStats,
     SegmentedIndex,
     _invert_partition,
     merge_wave,

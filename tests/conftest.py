@@ -26,10 +26,9 @@ def sf_dir():
 @pytest.fixture(scope="session")
 def documents_index(spark):
     """Cached index over the sf0.001 documents table (text + keyword source)."""
-    from lucenenet_spark.index.builder import build_inverted_index
+    from lucenenet_spark.index.segments import build_segmented_index
 
     docs = spark.read.parquet(os.path.join(SF_DIR, "documents.parquet"))
-    return build_inverted_index(
-        spark, docs, text_cols={"text": "text"},
-        keyword_cols={"source": "source"},
+    return build_segmented_index(
+        spark, docs, text_col="text", keyword_cols={"source": "source"},
     ).cache()

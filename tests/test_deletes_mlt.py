@@ -181,3 +181,50 @@ def test_expunge_deletes_matches_fresh_build(spark, corpus_index):
         assert a == b, qq
     assert not ({r[0] for r in
                  Searcher(purged).search(q, 50).collect()} & set(victims))
+
+
+def test_expunge_after_repeated_updates_matches_fresh_build(spark,
+                                                           corpus_index):
+    """Re-committing the same keys leaves whole update segments dead, so
+    the expunge rewrite sees Arrow batches in which every row belongs to
+    a deleted doc; it must drop them and still match a fresh build over
+    the live rows.  Small Arrow batches make such batches certain at
+    this corpus size (at full batch size it takes thousands of files)."""
+    from lucenenet_spark.index.segments import (
+        build_segmented_index, expunge_deletes, update_documents)
+
+    idx = corpus_index
+    hot = idx.stored.orderBy("doc_id").limit(20).collect()
+    for gen in range(3):
+        rows = [(r["repo"], r["path"], r["commit"], r["lang"],
+                 f"{r['content']} generation{gen} rewrite") for r in hot]
+        idx = update_documents(
+            idx, spark.createDataFrame(
+                rows, "repo string, path string, commit string, "
+                      "lang string, content string"),
+            ["repo", "path"], text_col="content", lang_col="lang")
+    key = "spark.sql.execution.arrow.maxRecordsPerBatch"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "8")
+    try:
+        purged = expunge_deletes(idx)
+        purged.segments.count()  # the rewrite runs here, at small batches
+    finally:
+        spark.conf.set(key, prev)
+    assert purged.tombstones is None
+    assert purged.n_docs == corpus_index.n_docs
+
+    fresh = build_segmented_index(spark, purged.stored, text_col="content",
+                                  lang_col="lang")
+    assert purged.n_docs == fresh.n_docs
+    assert purged.avgdl == pytest.approx(fresh.avgdl)
+    for q in (ast.Term("index", field="content"),
+              ast.Term("generation2", field="content"),
+              ast.Term("generation0", field="content"),
+              ast.Phrase(("generation2", "rewrite"), field="content"),
+              ast.Prefix("se", field="content")):
+        a = [tuple(r) for r in Searcher(purged).search(q, 15).collect()]
+        b = [tuple(r) for r in Searcher(fresh).search(q, 15).collect()]
+        assert a == b, q
+    assert len(Searcher(purged).search(
+        ast.Term("generation2", field="content"), 50).collect()) == 20

@@ -5,7 +5,8 @@ arange/reduceat positions+norms; segments._invert_partition) must be
 bit-identical to the original per-doc loop on every analyzer corner:
 emails, acronyms, possessives, stopword holes, >255-char tokens,
 mixed code/standard languages in one partition, folding, terms shared
-between the two analyzer vocabularies."""
+between the two analyzer vocabularies — for the default analyzer and
+for every StandardChain analyzer (stemmers, stop sets, exclusions)."""
 
 from __future__ import annotations
 
@@ -15,7 +16,23 @@ import numpy as np
 import pandas as pd
 import pytest
 
+from lucenenet_spark.analysis.german import german_legacy_analyzer
+from lucenenet_spark.analysis.snowball import (
+    english_snowball_analyzer, german_snowball_analyzer)
+from lucenenet_spark.analysis.snowball_ext import swedish_snowball_analyzer
 from lucenenet_spark.index.segments import _invert_partition
+
+# analyzer=None is the default lang-dispatching chain; the rest are
+# StandardChain instances that the fast path must run too.  Every
+# equivalence test below runs each of them.
+ANALYZERS = {
+    "default": None,
+    "english_snowball": english_snowball_analyzer(),
+    "german_snowball": german_snowball_analyzer(),
+    "german_legacy_excl": german_legacy_analyzer(
+        exclusions=frozenset({"häuser", "running"})),
+    "swedish_snowball": swedish_snowball_analyzer(),
+}
 
 
 class _FakeTC:
@@ -28,9 +45,10 @@ class _FakeTC:
 
 
 def _run(pdf, *, positions=True, fold=False, force_slow=False,
-         lang_col="lang", batches=None):
+         lang_col="lang", batches=None, analyzer=None):
     fn = _invert_partition("content", "doc_id", "content", lang_col,
-                           positions, fold=fold, force_slow=force_slow)
+                           positions, fold=fold, analyzer=analyzer,
+                           force_slow=force_slow)
     chunks = batches if batches is not None else [pdf]
     with um.patch("pyspark.TaskContext", _FakeTC):
         out = pd.concat(list(fn(iter(chunks))), ignore_index=True)
@@ -55,6 +73,9 @@ TRICKY_DOCS = [
     ("PYTHON", "Dispatch_on_lowercased_LANG value"),    # lang case
     ("latin", "lang not in CODE_LANGS goes standard"),  # non-code lang
     (None, "trailing.dot. host.name.tld. i.b.m. plain"),
+    # German stop words, umlauts, stemmable and excluded forms
+    (None, "Die Häuser und die Bäume der Straßen, running runners ran"),
+    ("de", "häuser HÄUSER Häusern über Wölkchen möglichkeiten"),
 ]
 
 
@@ -70,27 +91,38 @@ def _pdf(docs):
 @pytest.mark.parametrize("fold", [True, False])
 def test_fast_equals_slow_tricky(positions, fold):
     pdf = _pdf(TRICKY_DOCS)
-    fast = _run(pdf, positions=positions, fold=fold)
-    slow = _run(pdf, positions=positions, fold=fold, force_slow=True)
-    pd.testing.assert_frame_equal(fast, slow)
-    assert len(fast) > 0
+    for name, an in ANALYZERS.items():
+        fast = _run(pdf, positions=positions, fold=fold, analyzer=an)
+        slow = _run(pdf, positions=positions, fold=fold, analyzer=an,
+                    force_slow=True)
+        pd.testing.assert_frame_equal(fast, slow, obj=name)
+        assert len(fast) > 0, name
 
 
 def test_fast_equals_slow_multibatch():
     """Batch boundaries must not affect the output (positions restart per
     doc; factorize spans batches)."""
     pdf = _pdf(TRICKY_DOCS)
-    whole = _run(pdf)
-    split = _run(None, batches=[pdf.iloc[:5], pdf.iloc[5:9],
-                                pdf.iloc[9:]])
-    pd.testing.assert_frame_equal(whole, split)
+    batches = [pdf.iloc[:5], pdf.iloc[5:9], pdf.iloc[9:]]
+    for name, an in ANALYZERS.items():
+        whole = _run(pdf, analyzer=an)
+        split = _run(None, batches=batches, analyzer=an)
+        pd.testing.assert_frame_equal(whole, split, obj=name)
+        slow = _run(None, batches=batches, analyzer=an, force_slow=True)
+        pd.testing.assert_frame_equal(split, slow, obj=name)
 
 
 def test_fast_equals_slow_no_lang_col():
     pdf = _pdf([(None, t) for _, t in TRICKY_DOCS])
-    fast = _run(pdf, lang_col=None)
-    slow = _run(pdf, lang_col=None, force_slow=True)
-    pd.testing.assert_frame_equal(fast, slow)
+    for name, an in ANALYZERS.items():
+        fast = _run(pdf, lang_col=None, analyzer=an)
+        slow = _run(pdf, lang_col=None, analyzer=an, force_slow=True)
+        pd.testing.assert_frame_equal(fast, slow, obj=name)
+        if an is not None:
+            # a StandardChain ignores lang_col: the same docs with their
+            # code/standard lang tags index identically
+            tagged = _run(_pdf(TRICKY_DOCS), analyzer=an)
+            pd.testing.assert_frame_equal(fast, tagged, obj=name)
 
 
 def test_fast_equals_slow_random_corpus():
@@ -99,24 +131,43 @@ def test_fast_equals_slow_random_corpus():
     pdf = pd.DataFrame(
         rows, columns=["repo", "path", "commit", "lang", "content"])
     pdf["doc_id"] = np.arange(len(pdf), dtype=np.int64)
-    fast = _run(pdf)
-    slow = _run(pdf, force_slow=True)
-    pd.testing.assert_frame_equal(fast, slow)
-    assert len(fast) > 100
+    for name, an in ANALYZERS.items():
+        for lang_col in ("lang", None):
+            fast = _run(pdf, analyzer=an, lang_col=lang_col)
+            slow = _run(pdf, analyzer=an, lang_col=lang_col,
+                        force_slow=True)
+            pd.testing.assert_frame_equal(fast, slow,
+                                          obj=f"{name}/{lang_col}")
+            assert len(fast) > 100, name
 
 
 def test_multivalued_column_takes_slow_path():
     """array<string> columns must still produce multi-value gap semantics
-    (the mode probe routes them to the slow path)."""
+    (the mode probe routes them to the slow path, whatever the
+    analyzer)."""
     pdf = pd.DataFrame({
         "doc_id": np.array([1, 2], dtype=np.int64),
         "lang": [None, None],
         "content": [["alpha beta", "gamma"], None],
     })
-    out = _run(pdf)
-    assert set(out["term"]) == {"alpha", "beta", "gamma"}
-    # positions continue across values (gap=0 default)
-    row = out[out["term"] == "gamma"].iloc[0]
     from lucenenet_spark.index import codec
-    pos = codec.varint_decode(row["pos_blob"])
-    assert pos.tolist() == [2]
+    for an in (None, english_snowball_analyzer()):
+        out = _run(pdf, analyzer=an)
+        assert set(out["term"]) == {"alpha", "beta", "gamma"}
+        # positions continue across values (gap=0 default)
+        row = out[out["term"] == "gamma"].iloc[0]
+        pos = codec.varint_decode(row["pos_blob"])
+        assert pos.tolist() == [2]
+
+
+def test_non_chain_analyzer_takes_slow_path():
+    """An analyzer that is not term->term (shingles span two tokens) is
+    never run through the per-unique-term fast path."""
+    from lucenenet_spark.analysis.shingle import shingle_analyzer
+    pdf = _pdf([(None, "alpha beta gamma"), (None, "beta the gamma")])
+    an = shingle_analyzer()
+    out = _run(pdf, analyzer=an)
+    assert {"alpha beta", "beta gamma", "beta _", "_ gamma"} <= set(
+        out["term"])
+    pd.testing.assert_frame_equal(
+        out, _run(pdf, analyzer=an, force_slow=True))

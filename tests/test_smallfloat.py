@@ -7,7 +7,7 @@ from __future__ import annotations
 
 import numpy as np
 import pytest
-from hypothesis import given, settings
+from hypothesis import example, given, settings
 from hypothesis import strategies as st
 
 from lucenenet_spark.functions.smallfloat import (
@@ -24,6 +24,10 @@ def test_golden_points():
     assert byte315_to_float(0) == 0.0
     assert float_to_byte315(-3.5) == 0          # bits <= 0 -> 0
     assert float_to_byte315(1e-30) == 1         # underflow -> smallest
+    # just under NORM_TABLE[1] (smallfloat == fzero): still underflow,
+    # rounds UP to byte 1 (SmallFloat.cs tests `<=`, not `<`)
+    assert float_to_byte315(5.09e-10) == 1
+    assert float_to_byte315(5.5e-10) == 1
     assert float_to_byte315(1e30) == 255        # overflow -> largest
 
 
@@ -37,6 +41,8 @@ def test_idempotent_on_table_values():
 
 @given(st.floats(min_value=1e-12, max_value=1e12,
                  allow_nan=False, allow_infinity=False))
+@example(5.09e-10)
+@example(5.5e-10)
 @settings(max_examples=300, deadline=None)
 def test_staircase_rounds_down(x):
     """Values round DOWN to the largest representable value <= x
@@ -54,8 +60,8 @@ def test_staircase_rounds_down(x):
 
 
 def test_vector_matches_scalar():
-    xs = np.array([0.0, -1.0, 1e-30, 1.0, 0.125, 7.5, 1e30, 0.0078125],
-                  dtype=np.float32)
+    xs = np.array([0.0, -1.0, 1e-30, 5.09e-10, 5.5e-10, 1.0, 0.125, 7.5,
+                   1e30, 0.0078125], dtype=np.float32)
     enc = float_to_byte315_np(xs)
     assert enc.tolist() == [float_to_byte315(float(x)) for x in xs]
     dec = byte315_to_float_np(enc)
