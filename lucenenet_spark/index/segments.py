@@ -18,11 +18,14 @@ stages:
      analogue (IndexFileNames.cs:29-37) — and a killed build resumes from
      the last committed wave.
 
-Query-time: `postings` exposes a lazily-decoded relational view
-(field, term, doc_id, tf, dl, positions) that plans/lowering.Searcher
-scores; the (field, term) filter is applied BEFORE blob decode
-(term-dictionary seek analogue, TermInfosReader.cs:243-308 — only matching
-posting lists are decompressed).
+Query-time: one decode kernel (`_decode_udf`) and one view builder
+(`_decoded`) serve every read — `postings` (field, term, doc_id, tf, dl,
+positions), `postings_nopos`, `postings_payloads` and
+`postings_for_terms` — which plans/lowering.Searcher scores; the
+(field, term) filter is applied BEFORE blob decode (term-dictionary seek
+analogue, TermInfosReader.cs:243-308 — only matching posting lists are
+decompressed).  A term indexed without positions keeps its rows in every
+view, with NULL positions.
 
 Analysis: one invert kernel, two paths chosen by the analyzer's type and
 the column type (see _invert_partition) — the default and every
@@ -499,14 +502,22 @@ def merge_wave(segments: DataFrame, fan_in: int = MERGE_FACTOR,
     )
 
 
+def _derived():
+    return dc_field(init=False, default=None, repr=False)
+
+
 @dataclass
 class SegmentedIndex:
     """Compressed-postings index, queryable via plans/lowering.Searcher.
 
     Surface: decoded postings views (postings / postings_nopos /
-    postings_payloads), n_docs / avgdl, the stored-fields table (`stored`
-    is the source table itself — the .fdt/.fdx analogue, SURVEY.md §1.4),
-    id_col / fields, term_stats / term_dfs, deletes, cache, save/load."""
+    postings_payloads / postings_for_terms, all built by `_decoded` over
+    the one `_decode_udf` kernel; positions and payloads are NULL per doc
+    for terms indexed without them), n_docs / avgdl, the stored-fields
+    table (`stored` is the source table itself — the .fdt/.fdx analogue,
+    SURVEY.md §1.4), id_col / fields, term_stats / term_dfs, deletes,
+    cache, save/load.  Every dataclasses.replace starts a new generation
+    with no derived state (views, term stats, delete frames)."""
 
     spark: SparkSession
     segments: DataFrame
@@ -515,11 +526,13 @@ class SegmentedIndex:
     id_col: str = "doc_id"
     fields: tuple[str, ...] = ("content",)
     tombstones: DataFrame | None = None
-    _del_frames: DataFrame | None = dc_field(default=None, repr=False)
-    _postings: DataFrame | None = dc_field(default=None, repr=False)
-    _postings_nopos: DataFrame | None = dc_field(default=None, repr=False)
-    _postings_pay: DataFrame | None = dc_field(default=None, repr=False)
-    _term_stats: DataFrame | None = dc_field(default=None, repr=False)
+    # derived state, built lazily per generation: init=False keeps it out
+    # of dataclasses.replace, so every derived generation starts empty
+    _del_frames: DataFrame | None = _derived()
+    _postings: DataFrame | None = _derived()
+    _postings_nopos: DataFrame | None = _derived()
+    _postings_pay: DataFrame | None = _derived()
+    _term_stats: DataFrame | None = _derived()
 
     @property
     def n_docs(self) -> int:
@@ -534,22 +547,11 @@ class SegmentedIndex:
         """Decoded relational view (field, term, doc_id, tf, dl, positions).
 
         Decode is a scalar Arrow UDF in the projection, so Catalyst pushes
-        (field, term) predicates below it — only matching blobs decompress."""
+        (field, term) predicates below it — only matching blobs decompress.
+        positions is NULL for terms indexed without them."""
         if self._postings is None:
-            dec = _decode_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"))
-            self._postings = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"), z["pos"].alias("positions"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"),
-                        F.col("_p.positions").alias("positions"))
-            )
+            self._postings = _decoded(self.segments, ["field", "term"],
+                                      positions=True, payloads=False)
         return self._postings
 
     @property
@@ -561,18 +563,8 @@ class SegmentedIndex:
         Arrow-transfer cost) is the reference's omitTf/lazy-prox behavior
         (SegmentTermDocs vs SegmentTermPositions split)."""
         if self._postings_nopos is None:
-            dec = _decode_nopos_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"), F.col("dls_blob"))
-            self._postings_nopos = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"))
-            )
+            self._postings_nopos = _decoded(self.segments, ["field", "term"],
+                                            positions=False, payloads=False)
         return self._postings_nopos
 
     @property
@@ -582,58 +574,25 @@ class SegmentedIndex:
         Payload*Query read path.  Same decode-below-predicate shape as
         `postings`; payloads is null for terms indexed without them."""
         if self._postings_pay is None:
-            dec = _decode_pay_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"), F.col("pay_blob"))
-            self._postings_pay = (
-                self.segments
-                .withColumn("_p", F.explode(F.arrays_zip(
-                    z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                    z["dls"].alias("dl"), z["pos"].alias("positions"),
-                    z["pay"].alias("payloads"))))
-                .select("field", "term",
-                        F.col("_p.doc_id").alias("doc_id"),
-                        F.col("_p.tf").alias("tf"),
-                        F.col("_p.dl").alias("dl"),
-                        F.col("_p.positions").alias("positions"),
-                        F.col("_p.payloads").alias("payloads"))
-            )
+            self._postings_pay = _decoded(self.segments, ["field", "term"],
+                                          positions=True, payloads=True)
         return self._postings_pay
 
-    def postings_for_terms(self, term_frame: DataFrame,
-                           positions: bool = False) -> DataFrame:
-        """Postings for a dynamic term set with term_frame's extra columns
-        riding along.  The broadcast join lands on the SEGMENT rows —
-        i.e. BELOW the decode UDF — so only the matching terms' blobs ever
-        decompress (the term-dictionary seek, TermInfosReader.cs:243-308),
-        no matter that the term set is data-dependent."""
+    def postings_for_terms(self, term_frame: DataFrame) -> DataFrame:
+        """Positions-free postings for a dynamic term set with
+        term_frame's extra columns riding along.  The broadcast join lands
+        on the SEGMENT rows — i.e. BELOW the decode UDF — so only the
+        matching terms' blobs ever decompress (the term-dictionary seek,
+        TermInfosReader.cs:243-308), no matter that the term set is
+        data-dependent."""
         extra = [c for c in term_frame.columns if c not in ("field", "term")]
-        blob_cols = ["docs_blob", "tfs_blob", "dls_blob"] + (
-            ["pos_blob"] if positions else [])
         # project segments down to the blob columns first: metadata columns
         # (df, ttf, blocks) would collide with term_frame extras like df
-        seg = (self.segments.select("field", "term", *blob_cols)
+        seg = (self.segments
+               .select("field", "term", "docs_blob", "tfs_blob", "dls_blob")
                .join(F.broadcast(term_frame), ["field", "term"]))
-        if positions:
-            dec = _decode_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"),
-                    F.col("dls_blob"), F.col("pos_blob"))
-            zipped = F.arrays_zip(
-                z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                z["dls"].alias("dl"), z["pos"].alias("positions"))
-            out_cols = ["doc_id", "tf", "dl", "positions"]
-        else:
-            dec = _decode_nopos_udf()
-            z = dec(F.col("docs_blob"), F.col("tfs_blob"), F.col("dls_blob"))
-            zipped = F.arrays_zip(
-                z["docs"].alias("doc_id"), z["tfs"].alias("tf"),
-                z["dls"].alias("dl"))
-            out_cols = ["doc_id", "tf", "dl"]
-        return (
-            seg.withColumn("_p", F.explode(zipped))
-            .select("field", "term", *extra,
-                    *[F.col(f"_p.{c}").alias(c) for c in out_cols])
-        )
+        return _decoded(seg, ["field", "term", *extra],
+                        positions=False, payloads=False)
 
     def term_vectors(self) -> DataFrame:
         """Forward index (doc_id, field, vec: array<struct<term, tf>>) —
@@ -743,7 +702,7 @@ class SegmentedIndex:
         if self.tombstones is not None:
             t = self.tombstones.unionByName(t).distinct()
         from dataclasses import replace
-        return replace(self, tombstones=t, _del_frames=None)
+        return replace(self, tombstones=t)
 
     def delete_frames(self) -> DataFrame | None:
         """Per-segment delete bitmaps (seg_id, del_lo, del_kind, n_del,
@@ -810,100 +769,75 @@ class SegmentedIndex:
                    fields=tuple(meta["fields"]))
 
 
-_DECODE_NOPOS_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-])
+def _decode_udf(positions: bool, payloads: bool):
+    """The one postings decode kernel: delta+VInt blobs -> per-row
+    (docs, tfs, dls[, pos[, pay]]) arrays.  Inputs are the docs/tfs/dls
+    blobs, then pos_blob when `positions`, then pay_blob when `payloads`
+    (the TermPositions.GetPayload read path, src/Lucene.Net/Index/
+    SegmentTermPositions.cs:213-236: payload floats are a fixed-width
+    stream aligned with the position stream, sliced per doc by tf).
 
+    A row without positions (or payloads) emits a list of per-doc None,
+    never a NULL top-level array: arrays_zip of a NULL array is NULL and
+    the explode would silently drop the whole posting list."""
+    arr = T.ArrayType
+    fields = [T.StructField("docs", arr(T.LongType())),
+              T.StructField("tfs", arr(T.IntegerType())),
+              T.StructField("dls", arr(T.IntegerType()))]
+    if positions:
+        fields.append(T.StructField("pos", arr(arr(T.IntegerType()))))
+    if payloads:
+        fields.append(T.StructField("pay", arr(arr(T.FloatType()))))
 
-def _decode_nopos_udf():
-    @F.pandas_udf(_DECODE_NOPOS_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series,
-            dls_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o = [], [], []
-        for db, tb, lb in zip(docs_b, tfs_b, dls_b):
-            d, t, l, _ = codec.decode_postings(bytes(db), bytes(tb),
-                                               bytes(lb), b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o, "dls": dls_o})
-    return dec
-
-
-_DECODE_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-    T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
-])
-
-
-def _decode_udf():
-    @F.pandas_udf(_DECODE_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series, dls_b: pd.Series,
-            pos_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o, pos_o = [], [], [], []
-        for db, tb, lb, pb in zip(docs_b, tfs_b, dls_b, pos_b):
+    @F.pandas_udf(T.StructType(fields))
+    def dec(*blobs: pd.Series) -> pd.DataFrame:
+        out = {f.name: [] for f in fields}
+        for db, tb, lb, *rest in zip(*blobs):
+            pb = rest[0] if positions else None
             d, t, l, p = codec.decode_postings(
                 bytes(db), bytes(tb), bytes(lb), bytes(pb) if pb else b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-            if p is not None:
-                starts = np.concatenate([[0], np.cumsum(t)[:-1]])
-                pos_o.append([p[s:s + c].tolist()
-                              for s, c in zip(starts, t)])
-            else:
-                pos_o.append(None)
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o,
-                             "dls": dls_o, "pos": pos_o})
+            out["docs"].append(d.tolist())
+            out["tfs"].append(t.tolist())
+            out["dls"].append(l.tolist())
+            if not positions:
+                continue
+            if p is None:
+                out["pos"].append([None] * len(d))
+                if payloads:
+                    out["pay"].append([None] * len(d))
+                continue
+            starts = np.concatenate([[0], np.cumsum(t)[:-1]])
+            out["pos"].append([p[s:s + c].tolist()
+                               for s, c in zip(starts, t)])
+            if payloads:
+                y = np.frombuffer(bytes(rest[1]), "<f4") if rest[1] else None
+                out["pay"].append([y[s:s + c].tolist()
+                                   for s, c in zip(starts, t)]
+                                  if y is not None and len(y) == len(p)
+                                  else [None] * len(d))
+        return pd.DataFrame(out)
     return dec
 
 
-_DECODE_PAY_SCHEMA = T.StructType([
-    T.StructField("docs", T.ArrayType(T.LongType())),
-    T.StructField("tfs", T.ArrayType(T.IntegerType())),
-    T.StructField("dls", T.ArrayType(T.IntegerType())),
-    T.StructField("pos", T.ArrayType(T.ArrayType(T.IntegerType()))),
-    T.StructField("pay", T.ArrayType(T.ArrayType(T.FloatType()))),
-])
-
-
-def _decode_pay_udf():
-    """Positions + per-position payloads (the TermPositions.GetPayload
-    read path, src/Lucene.Net/Index/SegmentTermPositions.cs:213-236):
-    payload floats are a fixed-width stream aligned with the position
-    stream, sliced per doc by tf."""
-    @F.pandas_udf(_DECODE_PAY_SCHEMA)
-    def dec(docs_b: pd.Series, tfs_b: pd.Series, dls_b: pd.Series,
-            pos_b: pd.Series, pay_b: pd.Series) -> pd.DataFrame:
-        docs_o, tfs_o, dls_o, pos_o, pay_o = [], [], [], [], []
-        for db, tb, lb, pb, yb in zip(docs_b, tfs_b, dls_b, pos_b, pay_b):
-            d, t, l, p = codec.decode_postings(
-                bytes(db), bytes(tb), bytes(lb), bytes(pb) if pb else b"")
-            docs_o.append(d.tolist())
-            tfs_o.append(t.tolist())
-            dls_o.append(l.tolist())
-            # per-doc None (not a NULL top-level array) when absent:
-            # arrays_zip of a NULL array is NULL and the explode would
-            # silently drop the whole posting list
-            if p is not None:
-                starts = np.concatenate([[0], np.cumsum(t)[:-1]])
-                pos_o.append([p[s:s + c].tolist()
-                              for s, c in zip(starts, t)])
-                y = np.frombuffer(bytes(yb), "<f4") if yb else None
-                pay_o.append([y[s:s + c].tolist()
-                              for s, c in zip(starts, t)]
-                             if y is not None and len(y) == len(p)
-                             else [None] * len(d))
-            else:
-                pos_o.append([None] * len(d))
-                pay_o.append([None] * len(d))
-        return pd.DataFrame({"docs": docs_o, "tfs": tfs_o, "dls": dls_o,
-                             "pos": pos_o, "pay": pay_o})
-    return dec
+def _decoded(frame: DataFrame, keep: list[str], positions: bool,
+             payloads: bool) -> DataFrame:
+    """The one view builder: decode -> arrays_zip -> explode -> select.
+    Rows of `frame` (segment rows, possibly joined) become one row per
+    (term, doc): `keep` + doc_id, tf, dl[, positions[, payloads]]."""
+    blobs = ["docs_blob", "tfs_blob", "dls_blob"]
+    cols = [("docs", "doc_id"), ("tfs", "tf"), ("dls", "dl")]
+    if positions:
+        blobs.append("pos_blob")
+        cols.append(("pos", "positions"))
+    if payloads:
+        blobs.append("pay_blob")
+        cols.append(("pay", "payloads"))
+    z = _decode_udf(positions, payloads)(*[F.col(b) for b in blobs])
+    return (
+        frame.withColumn("_p", F.explode(F.arrays_zip(
+            *[z[src].alias(dst) for src, dst in cols])))
+        .select(*keep, *[F.col(f"_p.{dst}").alias(dst) for _, dst in cols])
+    )
 
 
 # --------------------------------------------------------------- build API
@@ -1136,9 +1070,7 @@ def update_documents(
     from dataclasses import replace
     index.unpersist_derived()
     return replace(index, segments=index.segments.unionByName(seg2),
-                   stats=stats, stored=stored_new, tombstones=tomb,
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+                   stats=stats, stored=stored_new, tombstones=tomb)
 
 
 def _latest_committed_wave(ckpt: str) -> int | None:
@@ -1216,9 +1148,7 @@ def add_indexes(base: SegmentedIndex, *others: SegmentedIndex) -> SegmentedIndex
     for o in others:
         o.unpersist_derived()
     return replace(base, segments=seg, stored=stored, tombstones=tomb,
-                   stats=IndexStats(n_docs=n_docs, total_tokens=total),
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+                   stats=IndexStats(n_docs=n_docs, total_tokens=total))
 
 
 def parallel_reader(*parts: SegmentedIndex,
@@ -1271,9 +1201,7 @@ def parallel_reader(*parts: SegmentedIndex,
                     "left")
     from dataclasses import replace
     return replace(base, segments=seg, stored=stored, tombstones=tomb,
-                   fields=tuple(fields),
-                   _del_frames=None, _postings=None, _postings_nopos=None,
-                   _postings_pay=None, _term_stats=None)
+                   fields=tuple(fields))
 
 
 def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
@@ -1294,72 +1222,51 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
     n_dead = index.tombstones.count()  # scalar aggregate, never the ids
     if n_dead == 0:
         from dataclasses import replace
-        return replace(index, tombstones=None, _del_frames=None)
+        return replace(index, tombstones=None)
     field_name = index.fields[0]
     from .deletes import keep_mask
 
     def kernel(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
-            out = {k: [] for k in (
-                "field", "term", "seg_id", "df", "ttf", "docs_blob",
-                "tfs_blob", "dls_blob", "pos_blob", "pay_blob", "blocks")}
+            out = {f.name: [] for f in SEGMENT_SCHEMA}
             for row in pdf.itertuples(index=False):
-                if row.del_blob is None:  # segment holds no deletes
-                    out["field"].append(row.field)
-                    out["term"].append(row.term)
-                    out["seg_id"].append(int(row.seg_id))
-                    out["df"].append(int(row.df))
-                    out["ttf"].append(int(row.ttf))
-                    out["docs_blob"].append(bytes(row.docs_blob))
-                    out["tfs_blob"].append(bytes(row.tfs_blob))
-                    out["dls_blob"].append(bytes(row.dls_blob))
-                    out["pos_blob"].append(
-                        bytes(row.pos_blob) if row.pos_blob else b"")
-                    out["pay_blob"].append(
-                        bytes(row.pay_blob) if row.pay_blob else b"")
-                    out["blocks"].append(
-                        list(row.blocks) if row.blocks is not None else [])
-                    continue
-                docs, tfs, dls, pos = codec.decode_postings(
-                    bytes(row.docs_blob), bytes(row.tfs_blob),
-                    bytes(row.dls_blob),
-                    bytes(row.pos_blob) if row.pos_blob else b"")
-                pay = bytes(row.pay_blob) if row.pay_blob else b""
-                hit = ~keep_mask(docs, row.del_lo, row.del_kind,
-                                 row.del_blob)
-                if not hit.any():
+                pos_b = bytes(row.pos_blob) if row.pos_blob else b""
+                pay_b = bytes(row.pay_blob) if row.pay_blob else b""
+                enc = None
+                if row.del_blob is not None:  # segment holds deletes
+                    docs, tfs, dls, _ = codec.decode_postings(
+                        bytes(row.docs_blob), bytes(row.tfs_blob),
+                        bytes(row.dls_blob))
+                    keep = keep_mask(docs, row.del_lo, row.del_kind,
+                                     row.del_blob)
+                    if not keep.all():
+                        if not keep.any():
+                            continue  # whole posting list was deleted docs
+                        tok_keep = np.repeat(keep, tfs)
+                        pos = (codec.decode_positions(pos_b, tfs)[tok_keep]
+                               if pos_b else None)
+                        enc = codec.encode_postings(
+                            docs[keep], tfs[keep], dls[keep], pos)
+                        enc["pay_blob"] = (
+                            np.frombuffer(pay_b, "<f4")[tok_keep]
+                            .astype("<f4").tobytes() if pay_b else b"")
+                if enc is None:  # no dead doc here: bytes pass through
                     enc = {"df": int(row.df), "ttf": int(row.ttf),
                            "docs_blob": bytes(row.docs_blob),
                            "tfs_blob": bytes(row.tfs_blob),
                            "dls_blob": bytes(row.dls_blob),
-                           "pos_blob": (bytes(row.pos_blob)
-                                        if row.pos_blob else b""),
-                           "pay_blob": pay,
+                           "pos_blob": pos_b, "pay_blob": pay_b,
                            "blocks": (list(row.blocks)
                                       if row.blocks is not None else [])}
-                else:
-                    keep = ~hit
-                    if not keep.any():
-                        continue  # whole posting list was deleted docs
-                    tok_keep = np.repeat(keep, tfs)
-                    pk = pos[tok_keep] if pos is not None else None
-                    enc = codec.encode_postings(
-                        docs[keep], tfs[keep], dls[keep], pk)
-                    enc["pay_blob"] = (
-                        np.frombuffer(pay, "<f4")[tok_keep]
-                        .astype("<f4").tobytes() if pay else b"")
-                out["field"].append(row.field)
-                out["term"].append(row.term)
-                out["seg_id"].append(int(row.seg_id))
-                for k in ("df", "ttf", "docs_blob", "tfs_blob",
-                          "dls_blob", "pos_blob", "pay_blob", "blocks"):
-                    out[k].append(enc[k])
+                enc.update(field=row.field, term=row.term,
+                           seg_id=int(row.seg_id))
+                for k, col in out.items():
+                    col.append(enc[k])
             # a batch whose rows all belonged to deleted docs yields no
             # frame: an empty one types every column float64, which Arrow
             # cannot convert to the `blocks` list<struct>
             if out["field"]:
-                yield pd.DataFrame(
-                    out, columns=[f.name for f in SEGMENT_SCHEMA])
+                yield pd.DataFrame(out)
 
     joined = index.segments.join(index.delete_frames(), "seg_id", "left")
     seg2 = joined.mapInPandas(kernel, SEGMENT_SCHEMA).cache()
@@ -1375,9 +1282,7 @@ def expunge_deletes(index: SegmentedIndex) -> SegmentedIndex:
     from dataclasses import replace
     index.unpersist_derived()
     return replace(index, segments=seg2, stats=stats, stored=stored_new,
-                   tombstones=None, _del_frames=None, _postings=None,
-                   _postings_nopos=None, _postings_pay=None,
-                   _term_stats=None)
+                   tombstones=None)
 
 
 def _commit_wave(spark: SparkSession, seg: DataFrame, ckpt: str, wave: int,

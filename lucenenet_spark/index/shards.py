@@ -54,7 +54,9 @@ class ShardedIndex:
     shards: list[SegmentedIndex]
     bounds: list[tuple[int, int]]  # inclusive [bottom, top] per shard
     id_col: str = "doc_id"
-    _union: SegmentedIndex | None = dc_field(default=None, repr=False)
+    # derived per generation; init=False keeps it out of replace()
+    _union: SegmentedIndex | None = dc_field(init=False, default=None,
+                                             repr=False)
 
     # ------------------------------------------------------------ routing
 
@@ -98,7 +100,7 @@ class ShardedIndex:
             if i in hit:
                 s = s.with_deletes(ids.where(idc.between(lo, hi)))
             new_shards.append(s)
-        return replace(self, shards=new_shards, _union=None)
+        return replace(self, shards=new_shards)
 
     def update_documents(self, new_docs: DataFrame, key_cols: list[str],
                          text_col: str, **kwargs) -> "ShardedIndex":
@@ -128,7 +130,7 @@ class ShardedIndex:
             gmax = max(gmax, int(m or 0))
         out.append(update_documents(self.shards[-1], new_docs, key_cols,
                                     text_col, id_base=gmax, **kwargs))
-        return replace(self, shards=out, _union=None)
+        return replace(self, shards=out)
 
     def expunge_deletes(self) -> "ShardedIndex":
         """Routed ExpungeDeletes: ONLY shards carrying tombstones are
@@ -138,7 +140,7 @@ class ShardedIndex:
         from .segments import expunge_deletes as _expunge
         out = [(_expunge(s) if s.tombstones is not None else s)
                for s in self.shards]
-        return replace(self, shards=out, _union=None)
+        return replace(self, shards=out)
 
     # -------------------------------------------------------- persistence
 
@@ -207,9 +209,7 @@ class ShardedIndex:
         self._union = replace(
             base, segments=seg, stored=stored,
             tombstones=None if tomb is None else tomb.distinct(),
-            stats=IndexStats(n_docs=n_docs, total_tokens=total),
-            _del_frames=None, _postings=None, _postings_nopos=None,
-            _postings_pay=None, _term_stats=None)
+            stats=IndexStats(n_docs=n_docs, total_tokens=total))
         return self._union
 
     def searcher(self, similarity=None):

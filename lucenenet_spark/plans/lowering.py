@@ -653,7 +653,9 @@ class Searcher:
             def _lucene_freq(pl: pd.Series) -> pd.Series:
                 vals = []
                 for entries in pl:
-                    plists = [[int(x) for x in e["positions"]]
+                    # NULL positions (term indexed without them) -> no match
+                    plists = [[] if e["positions"] is None
+                              else [int(x) for x in e["positions"]]
                               for e in entries]
                     offs = [int(e["qoff"]) for e in entries]
                     vals.append(lucene_sloppy_freq(plists, offs, slop))

@@ -127,9 +127,7 @@ def test_payloads_survive_force_merge(spark, pay_index):
 
     from lucenenet_spark.index.segments import merge_wave
     merged = replace(pay_index,
-                     segments=merge_wave(pay_index.segments, fan_in=8),
-                     _postings=None, _postings_nopos=None,
-                     _postings_pay=None, _term_stats=None)
+                     segments=merge_wave(pay_index.segments, fan_in=8))
     assert merged.segments.select("seg_id").distinct().count() == 1
     q = ast.PayloadNear(("cat", "dog"), slop=1, fn="min")
     a = sorted(map(tuple, Searcher(pay_index).search(q, 10).collect()))
@@ -203,9 +201,7 @@ def test_checkindex_flags_misaligned_pay_blob(spark, pay_index):
         pay_index,
         segments=pay_index.segments.withColumn(
             "pay_blob", F.when(F.col("term") == "cat",
-                               F.lit(b"\x00\x00")).otherwise(F.col("pay_blob"))),
-        _postings=None, _postings_nopos=None, _postings_pay=None,
-        _term_stats=None)
+                               F.lit(b"\x00\x00")).otherwise(F.col("pay_blob"))))
     rep = check_index(bad)
     assert not rep["clean"]
     assert any("I9" in i[-1] for i in rep["issues"])

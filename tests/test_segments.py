@@ -345,8 +345,7 @@ def test_merge_wave_fallback_out_of_order_segments(spark, corpus):
     scrambled = base.segments.withColumn(
         "seg_id", (F.lit(3) - F.col("seg_id")).cast("long"))
     from dataclasses import replace
-    idx = replace(base, segments=merge_wave(scrambled, fan_in=4).cache(),
-                  _postings=None, _postings_nopos=None, _term_stats=None)
+    idx = replace(base, segments=merge_wave(scrambled, fan_in=4).cache())
 
     want = [(r["doc_id"], r["score"]) for r in
             Searcher(base).search(ast.Term("index", field="content"), 10)
@@ -512,3 +511,82 @@ def test_enumerate_terms_max_df_guard(spark, segidx):
                segidx.enumerate_terms(field="content", include_docs=True,
                                       max_df=None).collect()}
     assert len(ungated[hot["term"]]) == hot["df"]
+
+
+# ------------------------------------------- decoded views, generations
+
+
+@pytest.fixture(scope="module")
+def small_docs(spark):
+    rows = [(i, f"alpha beta w{i % 3}", f"red green blue t{i % 4}")
+            for i in range(20)]
+    return spark.createDataFrame(
+        rows, "doc_id long, text string, title string").cache()
+
+
+def test_positions_free_terms_keep_rows_in_every_view(spark, small_docs):
+    """A term indexed without positions keeps its rows in `postings`
+    (positions NULL), so every decoded view has the same (field, term,
+    doc) rows; phrase and span queries on such a field match nothing."""
+    from pyspark.sql import functions as F
+
+    from lucenenet_spark.index.segments import (build_segmented_index,
+                                                parallel_reader)
+    from lucenenet_spark.plans import ast
+    from lucenenet_spark.plans.lowering import Searcher
+
+    free = build_segmented_index(spark, small_docs, text_col="title",
+                                 field_name="title", positions=False)
+    text = build_segmented_index(spark, small_docs, text_col="text",
+                                 field_name="text")
+    both = parallel_reader(text, free, ignore_stored=(1,))
+    key = ["field", "term", "doc_id", "tf", "dl"]
+    for idx in (free, both):
+        want = sorted(map(tuple, idx.postings_nopos.select(*key).collect()))
+        assert len(want) == 80 + (60 if idx is both else 0)
+        for view in (idx.postings, idx.postings_payloads):
+            assert sorted(map(tuple, view.select(*key).collect())) == want
+        pos = idx.postings.select(
+            "field", F.col("positions").isNull().alias("none")).collect()
+        assert all(r["none"] == (r["field"] == "title") for r in pos)
+
+    s = Searcher(both)
+    for q in (ast.Phrase(("red", "green"), field="title"),
+              ast.Phrase(("red", "green"), field="title", slop=2),
+              ast.Phrase(("red", "green"), field="title", slop=2,
+                         slop_spec="all_tuples"),
+              ast.SpanNear((ast.SpanTerm("red", field="title"),
+                            ast.SpanTerm("green", field="title")), slop=1)):
+        assert s.search(q, 10).count() == 0, q
+    assert s.search(ast.Phrase(("alpha", "beta"), field="text"),
+                    30).count() == 20
+
+
+def test_replace_starts_generation_without_derived_state(spark, corpus):
+    """dataclasses.replace carries none of the lazily built state: every
+    view and term_stats() of the new object read the new segments."""
+    from dataclasses import replace
+
+    from pyspark.sql import functions as F
+
+    from lucenenet_spark.index.segments import build_segmented_index
+
+    idx = build_segmented_index(spark, corpus, text_col="content",
+                                lang_col="lang")
+
+    def terms(df):
+        return {r["term"] for r in df.select("term").distinct().collect()}
+
+    views = ("postings", "postings_nopos", "postings_payloads")
+    for v in views:
+        assert "merge" in terms(getattr(idx, v))
+    assert "merge" in terms(idx.term_stats())
+    kept = idx.segments.where(F.col("term") != "merge")
+    new = replace(idx, segments=kept)
+    want = terms(kept)
+    assert "merge" not in want
+    for v in views:
+        assert terms(getattr(new, v)) == want, v
+    assert terms(new.term_stats()) == want
+    assert new.postings_nopos.count() == (
+        idx.postings_nopos.where(F.col("term") != "merge").count())
